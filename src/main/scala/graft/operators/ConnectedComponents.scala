@@ -203,45 +203,4 @@ object ConnectedComponents {
     Lineage.free(e0)
     out
   }
-
-  /** The star kernel standalone (A/B surface for graft.tools.CcBench). */
-  private[graft] def minLabelStar(edges: DataFrame,
-      src: String = "src", dst: String = "dst",
-      maxRounds: Int = 50): DataFrame =
-    starComponents(edges, src, dst, maxRounds)
-
-  /** The pre-r7 min-label PROPAGATION variant, kept for A/B comparison
-    * (graft.tools.CcBench; BENCH_SCALE.md round-7 table). Two shuffles
-    * per round but rounds = component DIAMETER: fine on shallow dup
-    * clusters, non-convergent (capped at maxRounds) on deep graphs —
-    * the reason minLabel is a hybrid. */
-  private[graft] def minLabelPropagation(edges: DataFrame,
-      src: String = "src", dst: String = "dst",
-      maxRounds: Int = 50): DataFrame = {
-    val e0 = edges.select(col(src).as("s"), col(dst).as("d"))
-      .localCheckpoint(true)
-    val sym = e0.union(e0.select(col("d").as("s"), col("s").as("d")))
-    var labels = sym.select(col("s").as("id")).distinct()
-      .withColumn("component", col("id"))
-      .localCheckpoint(true)
-    var round = 0
-    var changed = 1L
-    while (changed > 0 && round < maxRounds) {
-      val nbrMin = sym.join(labels, col("d") === col("id"))
-        .groupBy(col("s")).agg(min(col("component")).as("__nc"))
-      val next = labels.join(nbrMin, col("id") === col("s"), "left")
-        .select(col("id"),
-          least(col("component"), coalesce(col("__nc"), col("component")))
-            .as("component"))
-        .localCheckpoint(true)
-      changed = next.join(
-          labels.withColumnRenamed("component", "__prev"), Seq("id"))
-        .filter(col("component") =!= col("__prev")).count()
-      Lineage.free(labels)
-      labels = next
-      round += 1
-    }
-    Lineage.free(e0)
-    labels
-  }
 }

@@ -557,9 +557,10 @@ object VectorOps {
         GROUP BY t.qid"""
 
   /** Oracle CTEs for the stored hub graph + entry medoids (cn, ep,
-    * md, edges0, hub, hedges, edges, f0) — the SQL replay of
-    * hubGraphAndEntry, shared by the v17 and v19 gates. Expects
-    * KmeansSql.UpToCent2 and geoCellsSql (d3g, a3, probes) upstream. */
+    * md, edges0, hub, hedges, edges, f0) — the SQL replay of the hub
+    * graph + entries `serve` loads, shared by the v17 and v19 gates.
+    * Expects KmeansSql.UpToCent2 and geoCellsSql (d3g, a3, probes)
+    * upstream. */
   private[queries] def hubGraphSql(degree: Int): String = s"""
         cn AS (SELECT vec_id AS cid, embedding::DOUBLE[] AS ce,
                       sqrt(list_dot_product(embedding::DOUBLE[],
@@ -658,7 +659,7 @@ object VectorOps {
                FROM probes p JOIN md m USING (cell)
                WHERE m.mid <> p.qid)"""
 
-  /** Oracle CTEs replaying graphAnnServeAdc's walk: like beamHopsSql
+  /** Oracle CTEs replaying the ADC-scored walk: like beamHopsSql
     * but every beam cut ranks on the INTEGER ADC score from `adcall`,
     * and the final `ann` is the exact-cosine re-rank of the last
     * beam (bf already holds every cosine). */
@@ -787,7 +788,7 @@ object VectorOps {
                    ORDER BY cos DESC, cid ASC) rn FROM rr)
                WHERE rn <= 3)"""
 
-  /** Oracle CTEs replaying graphAnnServe's beam walk hop by hop:
+  /** Oracle CTEs replaying the exact-scored beam walk hop by hop:
     * entry scoring (s0/b0 — f0's medoid entries ranked), then per hop
     * h: candidate union c<h> (previous beam + its out-edges, exact
     * DISTINCT, self excluded), exact re-score s<h> (bf already holds
@@ -1533,65 +1534,119 @@ object VectorOps {
       .select(col("qid"), col("mid").as("cid")).distinct()
   }
 
-  /** Stored graph + entry frontier for serving: loads the persisted
-    * (edges, medoids) frames from the TrainedIndex artifact store —
-    * the first demand per JVM builds and persists, every later call
-    * is a parquet scan (the v13→v15 train-once payoff applied to the
-    * graph tier, VERDICT r12 #1). */
-  private def hubGraphAndEntry(s: SparkSession, d: String, degree: Int,
-      kCells: Int = 8, entries: Int = 2)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val (edges, medoids) = TrainedIndex.graph(s, d, degree, kCells)
-    val cent = TrainedIndex.centroids(s, d, k = kCells)
-    (edges, graphEntries(s, d, cent, medoids, entries))
+  /** One graph-ANN serving configuration: which stored graph the walk
+    * runs over, how its beam cuts score candidates, the beam width and
+    * hop cap, the graph geometry (degree, kCells, entries — `serve`
+    * reads the artifact built at them), and the optional refined tail.
+    *
+    *  - `maxHops` caps the walk; the walk stops earlier at the frontier
+    *    fixed point (see [[walk]]), so a fixed hop count h and a
+    *    convergence cap h serve identical rows.
+    *  - `refine` unions the final frontier with the query's `refine`
+    *    nearest cells' members (v17d/v21: the dense local neighborhood
+    *    greedy descent walks past) before the last cut; cost per query
+    *    is refine x n/kCells scored rows, O(sqrt n) at the gated
+    *    k~sqrt(n) geometry, the price of recall above the walk's
+    *    plateau.
+    *  - `shortlist` is IVFADC+R's R: under ADC scoring the refined
+    *    union is ranked on integer codes and only the top R (default
+    *    `beam`) are re-ranked exactly. */
+  private[graft] final case class ServeSpec(beam: Int,
+      maxHops: Int = WalkMaxHops,
+      graph: ServeSpec.Graph = ServeSpec.Hub,
+      scoring: ServeSpec.Scoring = ServeSpec.Exact,
+      degree: Int = 16, kCells: Int = 8, entries: Int = 2,
+      refine: Option[Int] = None, shortlist: Option[Int] = None)
+
+  private[graft] object ServeSpec {
+    /** The hub kNN graph (TrainedIndex.graph, v17..v21) or the
+      * alpha-pruned Vamana graph (TrainedIndex.vamanaGraph, v22..). */
+    sealed trait Graph
+    case object Hub extends Graph
+    case object Vamana extends Graph
+
+    /** Exact cosine, or DiskANN-style PQ/ADC (Subramanya et al.
+      * NeurIPS'19): candidates score from their stored 32-bit codes
+      * against the query's lookup table (integer micro-unit sums, so
+      * every cut ranks on exact integers) and full vectors are read
+      * only by the final exact re-rank — the walk reads codes, the
+      * RAM tier at any corpus size, and queries x beam vectors once. */
+    sealed trait Scoring
+    case object Exact extends Scoring
+    case object Adc extends Scoring
   }
 
-  private[graft] def graphAnnServe(s: SparkSession, d: String,
-      beam: Int, hops: Int, degree: Int = 8, kCells: Int = 8,
-      entries: Int = 2): org.apache.spark.sql.DataFrame = {
-    val (edges, f0) = hubGraphAndEntry(s, d, degree, kCells, entries)
-    exactWalkServe(s, d, edges, f0, beam, hops)
+  /** Serves `spec` off the stored graph and entry medoids in the
+    * TrainedIndex artifact store — the first demand per JVM builds
+    * and persists, every later call is a parquet scan (the v13→v15
+    * train-once payoff applied to the graph tier, VERDICT r12 #1).
+    * Returns the (qid, cid) top-3 and the walk's stop hop. */
+  private[graft] def serve(s: SparkSession, d: String, spec: ServeSpec)
+      : (org.apache.spark.sql.DataFrame, Int) = {
+    val (edges, medoids) = spec.graph match {
+      case ServeSpec.Hub => TrainedIndex.graph(s, d, spec.degree, spec.kCells)
+      case ServeSpec.Vamana =>
+        TrainedIndex.vamanaGraph(s, d, spec.degree, spec.kCells)
+    }
+    val cent = TrainedIndex.centroids(s, d, k = spec.kCells)
+    serveFrom(s, d, spec, edges,
+      graphEntries(s, d, cent, medoids, spec.entries))
   }
 
-  /** Stored Vamana graph + entry frontier (the hubGraphAndEntry shape
-    * over the alpha-pruned artifact). */
-  private def vamanaGraphAndEntry(s: SparkSession, d: String,
-      degree: Int, kCells: Int, entries: Int)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val (edges, medoids) = TrainedIndex.vamanaGraph(s, d, degree, kCells)
-    val cent = TrainedIndex.centroids(s, d, k = kCells)
-    (edges, graphEntries(s, d, cent, medoids, entries))
+  /** Serves `spec` over an EXPLICIT (edges, f0) pair — the serving
+    * kernel decoupled from where the graph came from (artifact store,
+    * the stream-maintained lake, a loaded copy). `spec.graph`,
+    * `degree` and `entries` are the caller's business here; `kCells`
+    * picks the centroid artifact of the refined tail. `codesIn` is the
+    * stored (cid, c0..c<m-1>) code frame ADC scoring reads (default:
+    * the TrainedIndex artifact) — the walk never reads the vector
+    * column; query LUTs always compute at query time. */
+  private[graft] def serveFrom(s: SparkSession, d: String, spec: ServeSpec,
+      edges: org.apache.spark.sql.DataFrame,
+      f0: org.apache.spark.sql.DataFrame,
+      codesIn: Option[org.apache.spark.sql.DataFrame] = None)
+      : (org.apache.spark.sql.DataFrame, Int) = {
+    val exact = exactScorer(s, d)
+    val compass = spec.scoring match {
+      case ServeSpec.Exact => exact
+      case ServeSpec.Adc =>
+        adcScorer(s, d, codesIn.getOrElse(TrainedIndex.codes(s, d)))
+    }
+    val (frontier, stop) = walk(edges, f0, compass, spec.beam, spec.maxHops)
+    // one candidate union + one scoring pass: no second walk
+    val pool = spec.refine.fold(frontier) { r =>
+      compass(frontier.select(col("qid"), col("cid"))
+        .union(cellCandidates(s, d,
+          TrainedIndex.centroids(s, d, k = spec.kCells), r))
+        .distinct())
+    }
+    // the exact tier cuts on the scores it already holds; ADC re-ranks
+    // its final beam (or refined shortlist) exactly — its one
+    // full-vector touch
+    val ranked = spec.scoring match {
+      case ServeSpec.Exact => pool
+      case ServeSpec.Adc =>
+        val kept = if (spec.refine.isEmpty) pool
+          else topScored(pool, spec.shortlist.getOrElse(spec.beam))
+        exact(kept.select(col("qid"), col("cid")))
+    }
+    (topScored(ranked, 3).select(col("qid"), col("cid")), stop)
   }
 
-  /** v22: the exact-cosine beam walk over the alpha-pruned graph —
-    * same serving kernel as v17, only the edge artifact differs. */
-  private[graft] def vamanaAnnServe(s: SparkSession, d: String,
-      beam: Int, hops: Int, degree: Int = 8, kCells: Int = 8,
-      entries: Int = 2): org.apache.spark.sql.DataFrame = {
-    val (edges, f0) = vamanaGraphAndEntry(s, d, degree, kCells, entries)
-    exactWalkServe(s, d, edges, f0, beam, hops)
-  }
-
-  /** The ADC-compassed walk (v19's memory economics) over the
-    * alpha-pruned graph. */
-  private[graft] def vamanaAnnServeAdc(s: SparkSession, d: String,
-      beam: Int, hops: Int, degree: Int = 8, kCells: Int = 8,
-      entries: Int = 2): org.apache.spark.sql.DataFrame = {
-    val (edges, f0) = vamanaGraphAndEntry(s, d, degree, kCells, entries)
-    adcWalkServe(s, d, edges, f0, beam, hops,
-      Some(TrainedIndex.codes(s, d)))
-  }
-
-  /** v22b's serve with the CONVERGED ADC walk (the v22 stop rule on
-    * the code compass): walk to the integer-score fixed point, one
-    * exact re-rank of the dispatched final beam. */
-  private[graft] def vamanaAnnServeAdcConverged(s: SparkSession,
-      d: String, beam: Int, degree: Int, kCells: Int, entries: Int,
-      maxHops: Int = WalkMaxHops): org.apache.spark.sql.DataFrame = {
-    val (edges, f0) = vamanaGraphAndEntry(s, d, degree, kCells, entries)
-    val frontier = adcWalkFrontierConverged(s, d, edges, f0, beam,
-      maxHops, Some(TrainedIndex.codes(s, d)))
-    exactRerankTop3(s, d, frontier.select(col("qid"), col("cid")))
+  /** v19's ADC walk over an explicit (edges, f0) pair at a hop cap of
+    * `hops`. `codesIn` None encodes the corpus map-side instead of
+    * reading the code artifact (codes are deterministic ints, so both
+    * sources are bit-identical). */
+  private[graft] def adcWalkServe(s: SparkSession, d: String,
+      edges: org.apache.spark.sql.DataFrame,
+      f0: org.apache.spark.sql.DataFrame, beam: Int, hops: Int,
+      codesIn: Option[org.apache.spark.sql.DataFrame] = None)
+      : org.apache.spark.sql.DataFrame = {
+    val codes = codesIn.getOrElse(
+      pqCorpus(Tables.embeddings(s, d), TrainedIndex.codebook(s, d)))
+    serveFrom(s, d,
+      ServeSpec(beam, maxHops = hops, scoring = ServeSpec.Adc),
+      edges, f0, Some(codes))._1
   }
 
   /** The query's `refine` nearest cells' MEMBERS as (qid, cid)
@@ -1615,337 +1670,166 @@ object VectorOps {
       .select(col("qid"), col("cid"))
   }
 
-  /** v17d's REFINED graph serving: the beam walk's final frontier
-    * UNIONED with the query's `refine` nearest cells' members, then
-    * ONE exact re-rank cut. The walk supplies long-range candidates
-    * the cell scan cannot see (hub escapes), the cell scan supplies
-    * the dense local neighborhood greedy descent walks past (the
-    * measured recall-saturation failure: every per-walk axis — beam,
-    * degree, hops, and past ~16 even entry diversity — plateaus at a
-    * local-minimum set). Cost per query is beam + refine x n/kCells
-    * scored rows; at the gated k~sqrt(n) geometry that is O(sqrt n) —
-    * the IVF nprobe economics — vs the walk's O(1), the price of
-    * recall above the walk's plateau. The refinement is one candidate
-    * union + one exact scoring pass: no second walk, no extra hop
-    * over the stored graph. */
-  private[graft] def graphAnnServeRefined(s: SparkSession, d: String,
-      beam: Int, hops: Int, degree: Int = 8, kCells: Int = 8,
-      entries: Int = 2, refine: Int = 2)
-      : org.apache.spark.sql.DataFrame = {
-    val (edges, f0) = hubGraphAndEntry(s, d, degree, kCells, entries)
-    refinedExactServeFrom(s, d, edges, f0, beam, hops, kCells, refine)
-  }
-
-  /** The exact-refined tail over an EXPLICIT (edges, f0) pair — one
-    * copy shared by the hub (v17d) and vamana (v22c) refined serves,
-    * the refinedAdcServe convention applied to the exact tier. */
-  private def refinedExactServeFrom(s: SparkSession, d: String,
-      edges: org.apache.spark.sql.DataFrame,
-      f0: org.apache.spark.sql.DataFrame,
-      beam: Int, hops: Int, kCells: Int, refine: Int)
-      : org.apache.spark.sql.DataFrame =
-    refinedExactTail(s, d,
-      exactWalkFrontier(s, d, edges, f0, beam, hops), kCells, refine)
-
-  /** The refined union + exact re-rank over an EXPLICIT final
-    * frontier — one copy shared by the fixed-hop (v17d) and converged
-    * (v22c/st19d) refined serves. */
-  private def refinedExactTail(s: SparkSession, d: String,
-      frontier: org.apache.spark.sql.DataFrame, kCells: Int, refine: Int)
-      : org.apache.spark.sql.DataFrame = {
-    val cent = TrainedIndex.centroids(s, d, k = kCells)
-    val cands = frontier.select(col("qid"), col("cid"))
-      .union(cellCandidates(s, d, cent, refine))
-      .distinct()
-    exactRerankTop3(s, d, cands)
-  }
-
-  /** v22c: the refined union over the alpha-pruned walk — the
-    * max-recall composition (v17d's union lever on v22's graph). */
-  private[graft] def vamanaAnnServeRefined(s: SparkSession, d: String,
-      beam: Int, hops: Int, degree: Int = 8, kCells: Int = 8,
-      entries: Int = 2, refine: Int = 2)
-      : org.apache.spark.sql.DataFrame = {
-    val (edges, f0) = vamanaGraphAndEntry(s, d, degree, kCells, entries)
-    refinedExactServeFrom(s, d, edges, f0, beam, hops, kCells, refine)
-  }
-
-  /** The CONVERGED exact-cosine walk's top-3 serve over an explicit
-    * (edges, f0) pair — exactWalkServe with the hop count as a
-    * convergence test; shared by v22 and the maintained tier
-    * (st19d). */
-  private[graft] def exactWalkServeConverged(s: SparkSession, d: String,
-      edges: org.apache.spark.sql.DataFrame,
-      f0: org.apache.spark.sql.DataFrame,
-      beam: Int, maxHops: Int = WalkMaxHops)
-      : org.apache.spark.sql.DataFrame =
-    graft.plans.TopKPerKey.topK(
-      exactWalkFrontierConverged(s, d, edges, f0, beam, maxHops),
-      Seq("qid"), Seq(col("cos").desc, col("cid").asc), 3)
-      .select(col("qid"), col("cid"))
-
-  /** v22's serve with the hop count as a CONVERGENCE TEST (VERDICT
-    * r15 #4): the exact-cosine walk over the alpha-pruned graph hops
-    * until the frontier stops changing (capped at [[WalkMaxHops]]),
-    * then cuts top-3. */
-  private[graft] def vamanaAnnServeConverged(s: SparkSession, d: String,
-      beam: Int, degree: Int, kCells: Int, entries: Int,
-      maxHops: Int = WalkMaxHops): org.apache.spark.sql.DataFrame = {
-    val (edges, f0) = vamanaGraphAndEntry(s, d, degree, kCells, entries)
-    exactWalkServeConverged(s, d, edges, f0, beam, maxHops)
-  }
-
-  /** Probe form of [[vamanaAnnServeConverged]]: (top-3 serve, stop
-    * hop) — GraphAnnAb's `vamconv` mode and GraphAnnSpec use it to
-    * measure that the cap is headroom, not the budget. */
-  private[graft] def vamanaWalkStop(s: SparkSession, d: String,
-      beam: Int, degree: Int, kCells: Int, entries: Int,
-      maxHops: Int = WalkMaxHops)
-      : (org.apache.spark.sql.DataFrame, Int) = {
-    val (edges, f0) = vamanaGraphAndEntry(s, d, degree, kCells, entries)
-    val (frontier, stop) =
-      exactWalkFrontierConvergedWithStop(s, d, edges, f0, beam, maxHops)
-    (graft.plans.TopKPerKey.topK(frontier, Seq("qid"),
-      Seq(col("cos").desc, col("cid").asc), 3)
-      .select(col("qid"), col("cid")), stop)
-  }
-
-  /** v22c's refined union over the CONVERGED alpha-pruned walk. */
-  private[graft] def vamanaAnnServeRefinedConverged(s: SparkSession,
-      d: String, beam: Int, degree: Int, kCells: Int, entries: Int,
-      refine: Int, maxHops: Int = WalkMaxHops)
-      : org.apache.spark.sql.DataFrame = {
-    val (edges, f0) = vamanaGraphAndEntry(s, d, degree, kCells, entries)
-    refinedExactTail(s, d,
-      exactWalkFrontierConverged(s, d, edges, f0, beam, maxHops),
-      kCells, refine)
-  }
-
-  /** v17's exact-cosine beam walk over an EXPLICIT (edges, f0) pair —
-    * the serving kernel, decoupled from where the graph came from
-    * (artifact store, st18-maintained roots, or a fresh build). */
-  private[graft] def exactWalkServe(s: SparkSession, d: String,
-      edges: org.apache.spark.sql.DataFrame,
-      f0: org.apache.spark.sql.DataFrame,
-      beam: Int, hops: Int): org.apache.spark.sql.DataFrame =
-    graft.plans.TopKPerKey.topK(
-      exactWalkFrontier(s, d, edges, f0, beam, hops), Seq("qid"),
-      Seq(col("cos").desc, col("cid").asc), 3)
-      .select(col("qid"), col("cid"))
-
-  /** The walk's FINAL frontier (qid, cid, cos) — factored out of
-    * exactWalkServe so the refined variant (v17d) can union it with
-    * the entry cells' members before the last exact cut. */
-  private[graft] def exactWalkFrontier(s: SparkSession, d: String,
-      edges: org.apache.spark.sql.DataFrame,
-      f0: org.apache.spark.sql.DataFrame,
-      beam: Int, hops: Int): org.apache.spark.sql.DataFrame = {
-    val e = Tables.embeddings(s, d)
-    // norms ride the row (the v14 convention); the query side is
-    // localized once per serve (r18, see localizedByQid) so each hop's
-    // broadcast of it launches no job
-    val qn = localizedByQid(s, e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        sqrt(dot("embedding", "embedding")).as("nq")))
-    val cn = e.select(col("vec_id").as("cid"), col("embedding").as("ce"),
-      sqrt(dot("embedding", "embedding")).as("nc"))
-
-    // exact scoring of a (qid, cid) candidate frame: the tiny frame
-    // broadcasts into the embedding scan (bucket point-lookups at
-    // scale), queries broadcast by construction
-    def scoredOf(cands: org.apache.spark.sql.DataFrame) =
-      cn.join(broadcast(cands), Seq("cid"))
-        .join(broadcast(qn), Seq("qid"))
-        .withColumn("cos", dot("qe", "ce") / (col("nq") * col("nc")))
-        .select(col("qid"), col("cid"), col("cos"))
-
-    def topB(sc: org.apache.spark.sql.DataFrame) =
-      graft.plans.TopKPerKey.topK(sc, Seq("qid"),
-        Seq(col("cos").desc, col("cid").asc), beam)
-
-    // each frontier is <= queries x beam rows, driver-materialized
-    // (see DriverFrontier): one action per hop funds the next hop's
-    // LocalRelation, its pushdown ids, and (in the converged forms)
-    // the convergence test; the hop candidate union/dedup assembles
-    // on the driver too (r18, see hopCandsOf)
-    var frontier = materializeFrontier(s, topB(scoredOf(f0)))
-    for (_ <- 1 to hops) {
-      frontier = materializeFrontier(s,
-        topB(scoredOf(hopCandsOf(s, edges, frontier))))
-    }
-    frontier.df
-  }
-
-  /** Convergence CAP for [[exactWalkFrontierConverged]] — a runaway
-    * bound, NOT the search budget (VERDICT r15 #4 / BENCH_SCALE r15:
-    * hops is a convergence budget ~log n, and a pinned constant
-    * silently re-starves the walk at the next corpus jump — "measuring
-    * a graph at a starved budget measures the budget"). Measured stops
-    * at beam=64/entries=16 over the alpha-pruned k=25 graph
-    * (GraphAnnAb vamconv, r16): hop 6 at sf0.1 and hop 9 at the 10x
-    * fixture — a first cap candidate of 8 was measured BINDING at 10x
-    * (stop=8 == cap; raising it converged at 9 with +1 recall), the
-    * exact silent-starvation failure this test exists to prevent. 16
-    * is the dm10e unroll-depth discipline: 7 hops of headroom past
-    * the largest observed stop, and the oracle unrolls the same 16
-    * materialized hop CTEs so a stop drift moves both engines
-    * together. The engine loop EXITS at the stop (cap hops are never
-    * paid when converged); only the oracle pays the full unroll.
+  /** Default hop CAP for [[walk]] — a runaway bound, NOT the search
+    * budget (VERDICT r15 #4 / BENCH_SCALE r15: hops is a convergence
+    * budget ~log n, and a pinned constant silently re-starves the walk
+    * at the next corpus jump — "measuring a graph at a starved budget
+    * measures the budget"). Measured stops at beam=64/entries=16 over
+    * the alpha-pruned k=25 graph (GraphAnnAb vam, r16): hop 6 at sf0.1
+    * and hop 9 at the 10x fixture — a first cap candidate of 8 was
+    * measured BINDING at 10x (stop=8 == cap; raising it converged at 9
+    * with +1 recall), the exact silent-starvation failure this test
+    * exists to prevent. 16 is the dm10e unroll-depth discipline: 7
+    * hops of headroom past the largest observed stop, and the oracle
+    * unrolls the same 16 materialized hop CTEs so a stop drift moves
+    * both engines together. The walk EXITS at the stop (cap hops are
+    * never paid when converged); only the oracle pays the full unroll.
     * GraphAnnSpec asserts the stop is strictly inside the cap. */
   private[graft] val WalkMaxHops = 16
 
-  /** The beam walk iterated TO FIXED POINT (the dm10e recipe applied
-    * to the walk, VERDICT r15 #4): hop until the frontier SET stops
-    * changing, capped at `maxHops`. The stop derives from the data on
-    * both engines — the oracle (beamHopsConvergedSql) unrolls
-    * `maxHops` materialized hop CTEs, computes each hop's
-    * new-row count as data, and dispatches the first unchanged hop —
-    * so a corpus jump that needs more hops moves both sides together
-    * instead of silently starving the engine. Convergence is
-    * monotone-safe: each hop's candidates contain the previous
-    * frontier, so the per-qid beam cut can only improve, and
-    * `new \ old = {}` is exactly set equality. The emptiness test is
-    * a driver-side set comparison over the two <= queries x beam
-    * materialized frontiers (r17, see DriverFrontier) — the same
-    * bounded class, one action per hop instead of three. */
-  private[graft] def exactWalkFrontierConverged(s: SparkSession, d: String,
-      edges: org.apache.spark.sql.DataFrame,
-      f0: org.apache.spark.sql.DataFrame,
-      beam: Int, maxHops: Int = WalkMaxHops)
-      : org.apache.spark.sql.DataFrame =
-    exactWalkFrontierConvergedWithStop(s, d, edges, f0, beam, maxHops)._1
-
-  /** The converged walk plus its measured stop hop — the probe form
-    * GraphAnnSpec and tools use to verify the cap is headroom, not
-    * the budget. */
-  private[graft] def exactWalkFrontierConvergedWithStop(
-      s: SparkSession, d: String,
-      edges: org.apache.spark.sql.DataFrame,
-      f0: org.apache.spark.sql.DataFrame,
-      beam: Int, maxHops: Int = WalkMaxHops)
-      : (org.apache.spark.sql.DataFrame, Int) = {
-    val e = Tables.embeddings(s, d)
-    // query side localized once per serve (r18, see localizedByQid)
-    val qn = localizedByQid(s, e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        sqrt(dot("embedding", "embedding")).as("nq")))
-    val cn = e.select(col("vec_id").as("cid"), col("embedding").as("ce"),
-      sqrt(dot("embedding", "embedding")).as("nc"))
-    def scoredOf(cands: org.apache.spark.sql.DataFrame) =
-      cn.join(broadcast(cands), Seq("cid"))
-        .join(broadcast(qn), Seq("qid"))
-        .withColumn("cos", dot("qe", "ce") / (col("nq") * col("nc")))
-        .select(col("qid"), col("cid"), col("cos"))
-    def topB(sc: org.apache.spark.sql.DataFrame) =
-      graft.plans.TopKPerKey.topK(sc, Seq("qid"),
-        Seq(col("cos").desc, col("cid").asc), beam)
-
-    var frontier = materializeFrontier(s, topB(scoredOf(f0)))
+  /** The beam walk, iterated until the frontier SET stops changing or
+    * `maxHops` hops have run (the dm10e recipe applied to the walk,
+    * VERDICT r15 #4). Hop 0 scores the entry frontier `f0`; each hop
+    * scores the frontier ∪ its out-edges (self pairs dropped) and cuts
+    * `beam` per qid. Returns the final (qid, cid, score) frontier and
+    * the number of hops run (the stop hop).
+    *
+    * A fixed hop count needs no separate loop. The candidates are
+    * monotone in the frontier and the beam cut is a total order
+    * (score desc, cid asc), so once `next ⊆ frontier` the two are
+    * equal and every later hop returns them again: a walk of h fixed
+    * hops and this walk capped at h return the same frontier. The
+    * oracle replays either form — beamHopsSql unrolls h hops,
+    * beamHopsConvergedSql unrolls `maxHops` hop CTEs and dispatches the
+    * first unchanged one — so a corpus jump that needs more hops moves
+    * both engines together. The stop test is a driver-side set
+    * comparison over two materialized frontiers (r17, see
+    * DriverFrontier): one action per hop. */
+  private[graft] def walk(edges: org.apache.spark.sql.DataFrame,
+      f0: org.apache.spark.sql.DataFrame, scorer: Scorer, beam: Int,
+      maxHops: Int): (org.apache.spark.sql.DataFrame, Int) = {
+    var frontier = DriverFrontier.of(topScored(scorer(f0), beam))
     var h = 0
-    var converged = false
-    while (h < maxHops && !converged) {
-      val next = materializeFrontier(s,
-        topB(scoredOf(hopCandsOf(s, edges, frontier))))
-      // `next \ frontier = {}` on driver-held sets — the identical
-      // anti-join emptiness test, without a per-hop probe plan
-      converged = next.pairs.subsetOf(frontier.pairs)
+    var moved = true
+    while (h < maxHops && moved) {
+      val next = hop(edges, frontier, scorer, beam)
+      moved = !next.pairs.subsetOf(frontier.pairs)
       frontier = next
       h += 1
     }
     (frontier.df, h)
   }
 
-  /** Frontier-id pushdown cap for [[hopEdges]] (VERDICT r13 #2). Below
-    * it the hop inlines the frontier ids as an isin literal; above it
-    * the literal list itself becomes the cost — O(ids) analysis/codegen
-    * work per hop plan, which at a fleet-sized serving batch (10^4
-    * queries x beam 32 ~ 10^5 ids) bloats the plan long before the scan
-    * ever wins — so the hop falls back to the PLAIN broadcast join, the
-    * semantic base the pruned form is row-equal to (GraphAnnSpec pins
-    * both regimes). 1024 keeps every gate (20 queries x beam <= 48)
-    * on the point-lookup arm while bounding the literal list at ~3
-    * orders of magnitude under the pathological case. */
-  private[graft] val HopPushdownMaxIds = 1024
+  /** One hop of [[walk]]: score the frontier's hop candidates and cut
+    * the next beam. */
+  private[graft] def hop(edges: org.apache.spark.sql.DataFrame,
+      f: DriverFrontier, scorer: Scorer, beam: Int): DriverFrontier =
+    DriverFrontier.of(topScored(scorer(hopCandsOf(edges, f)), beam))
 
-  /** One hop's out-edge expansion: the frontier's src ids ride into
-    * the stored edge table's SCAN as a pushed predicate before the
-    * broadcast join resolves (qid, dst) pairs. The id set is
-    * driver-bounded TWICE over: by construction (<= queries x beam
-    * rows — the frontier is already localCheckpointed, so the collect
-    * re-reads checkpoint blocks, not the plan) and by `limit(cap+1)`,
-    * so even a mis-sized frontier can never collect more than the cap
-    * before the hop flips to the join arm. Semantically a no-op (the
-    * join restricts to the same keys), but it is what makes a hop a
-    * POINT LOOKUP instead of a full edge scan: the isin lands in the
-    * parquet scan's PushedFilters (GraphAnnSpec pins it; past
-    * parquet's inFilterThreshold=10 the reader prunes row groups by
-    * the id range, which the src-sorted edge artifact keeps tight —
-    * the >10-id shape is spec-pinned too), so at 100 TB an id-sorted/
-    * bucketed edge artifact serves each hop from the few row groups
-    * holding the frontier's ids. */
-  private[graft] def hopEdges(edges: org.apache.spark.sql.DataFrame,
-      frontier: org.apache.spark.sql.DataFrame,
-      maxPushIds: Int = HopPushdownMaxIds)
-      : org.apache.spark.sql.DataFrame = {
-    val srcIds = frontier.select(col("cid")).distinct()
-      .limit(if (maxPushIds >= Int.MaxValue - 1) Int.MaxValue
-             else maxPushIds + 1) // saturating: cap+1 must not overflow
-      .collect().map(_.getLong(0)).toSeq
-    val scan =
-      if (srcIds.size <= maxPushIds) edges.filter(col("src").isin(srcIds: _*))
-      else edges // fleet-sized frontier: literal list would bloat the plan
-    scan
-      .join(broadcast(frontier.select(col("qid"), col("cid").as("src"))),
-        Seq("src"))
-      .select(col("qid"), col("dst").as("cid"))
+  /** Scores a (qid, cid) candidate frame as (qid, cid, score); the
+    * candidate frame broadcasts into the scored table's scan (bucket
+    * point-lookups at scale), the query side broadcasts by
+    * construction. */
+  private[graft] type Scorer =
+    org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame
+
+  /** Exact cosine against the 20-query set. Norms ride the row (the
+    * v14 convention); the query side is localized once per scorer
+    * (r18, see localizedByQid) so no hop's broadcast of it launches a
+    * job. */
+  private[graft] def exactScorer(s: SparkSession, d: String): Scorer = {
+    val e = Tables.embeddings(s, d)
+    val qn = localizedByQid(s, e.filter(col("vec_id") < 20)
+      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
+        sqrt(dot("embedding", "embedding")).as("nq")))
+    val cn = e.select(col("vec_id").as("cid"), col("embedding").as("ce"),
+      sqrt(dot("embedding", "embedding")).as("nc"))
+    cands => cn.join(broadcast(cands), Seq("cid"))
+      .join(broadcast(qn), Seq("qid"))
+      .withColumn("score", dot("qe", "ce") / (col("nq") * col("nc")))
+      .select(col("qid"), col("cid"), col("score"))
   }
 
+  /** Integer ADC scores from the stored `codes` and the query set's
+    * lookup tables over the stored codebook — no vector byte is read.
+    * The LUT frame is built and localized once per scorer (the
+    * codebook rides its expressions as literals, so a second build
+    * would pay the analysis/codegen for the LUT columns again). */
+  private[graft] def adcScorer(s: SparkSession, d: String,
+      codes: org.apache.spark.sql.DataFrame): Scorer = {
+    val cb = TrainedIndex.codebook(s, d)
+    val qlut = localizedByQid(s, Tables.embeddings(s, d)
+      .filter(col("vec_id") < 20)
+      .select(col("vec_id").as("qid") +:
+        (0 until PqM).map(i => pqLutCol(cb, i).as(s"l$i")): _*))
+    cands => codes.join(broadcast(cands), Seq("cid"))
+      .join(broadcast(qlut), Seq("qid"))
+      .withColumn("score", pqScoreCol)
+      .select(col("qid"), col("cid"), col("score"))
+  }
+
+  /** Per-qid top-k on (score desc, cid asc) — the walk's beam cut and
+    * every serve's final cut, as the TopKPerKey heap. */
+  private def topScored(df: org.apache.spark.sql.DataFrame, k: Int)
+      : org.apache.spark.sql.DataFrame =
+    graft.plans.TopKPerKey.topK(df, Seq("qid"),
+      Seq(col("score").desc, col("cid").asc), k)
+
+  /** Frontier-id pushdown cap for [[hopEdgesOf]] (VERDICT r13 #2).
+    * Below it the hop inlines the frontier ids as an isin literal;
+    * above it the literal list itself becomes the cost — O(ids)
+    * analysis/codegen work per hop plan, which at a fleet-sized serving
+    * batch (10^4 queries x beam 32 ~ 10^5 ids) bloats the plan long
+    * before the scan ever wins — so the hop falls back to the PLAIN
+    * broadcast join, the semantic base the pruned form is row-equal to
+    * (GraphAnnSpec pins both regimes). 1024 keeps every gate (20
+    * queries x beam <= 48) on the point-lookup arm while bounding the
+    * literal list at ~3 orders of magnitude under the pathological
+    * case. */
+  private[graft] val HopPushdownMaxIds = 1024
+
   /** DRIVER-MATERIALIZED walk frontier (r17, guide §1.2/§5): a frontier
-    * is <= queries x beam rows BY CONSTRUCTION (TopKPerKey k=beam per
-    * qid over the broadcast query set — the same bounded class as
-    * hopEdges' id collect), yet the walk loops used to pay THREE
-    * actions per hop on it: the eager localCheckpoint, hopEdges'
-    * id collect, and (converged forms) the anti-join emptiness probe —
-    * each with its own analyzed/optimized plan. ONE collect now funds
-    * all three: the rows become a LocalRelation for the next hop's
-    * broadcast joins (doubles/longs round-trip the driver bit-exactly,
-    * so every downstream value is unchanged), the hop's pushdown ids
-    * derive from the rows, and convergence is a driver-side set
-    * comparison (`next \ frontier = {}` == `pairs subsetOf prev` —
-    * the identical test). Rows are sorted by the (qid, cid) key —
-    * unique per row — so the LocalRelation is deterministic even
-    * though collect order off a shuffle is not. At a fleet-sized
-    * serving batch the frontier outgrows the driver exactly when it
-    * outgrows hopEdges' literal list (HopPushdownMaxIds); the
-    * checkpointed form (exactWalkFrontier's shape pre-r17) is the
-    * documented escalation for that regime. */
-  private final case class DriverFrontier(
+    * is <= queries x beam rows BY CONSTRUCTION (a beam cut per qid over
+    * the broadcast query set), so ONE collect per hop funds everything
+    * the next hop needs: the rows become a LocalRelation for the next
+    * hop's broadcast joins (doubles/longs round-trip the driver
+    * bit-exactly, so every downstream value is unchanged), the hop's
+    * pushdown ids derive from the rows, and the stop test is a
+    * driver-side set comparison (`next \ frontier = {}` == `pairs
+    * subsetOf prev`). Rows are sorted by the (qid, cid) key — unique
+    * per row — so the LocalRelation is deterministic even though
+    * collect order off a shuffle is not. At a fleet-sized serving
+    * batch the frontier outgrows the driver exactly when it outgrows
+    * the pushdown literal list (HopPushdownMaxIds); a localCheckpointed
+    * frontier is the documented escalation for that regime. */
+  private[graft] final case class DriverFrontier(
       rows: Array[org.apache.spark.sql.Row],
       df: org.apache.spark.sql.DataFrame) {
-    /** The (qid, cid) pair set — the convergence subject. */
+    /** The (qid, cid) pair set — the stop test's subject. */
     lazy val pairs: Set[(Long, Long)] =
       rows.iterator.map(r => (r.getLong(0), r.getLong(1))).toSet
-    /** Distinct candidate ids — hopEdges' pushdown list. */
+    /** Distinct candidate ids — the hop's pushdown list. */
     lazy val ids: Seq[Long] = rows.iterator.map(_.getLong(1)).toSeq.distinct
   }
 
-  private def materializeFrontier(s: SparkSession,
-      df: org.apache.spark.sql.DataFrame): DriverFrontier = {
-    val rows = df.collect().sortBy(r => (r.getLong(0), r.getLong(1)))
-    DriverFrontier(rows,
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema))
+  private[graft] object DriverFrontier {
+    /** Collects a (qid, cid, ...) frame into a frontier. */
+    def of(df: org.apache.spark.sql.DataFrame): DriverFrontier = {
+      val rows = df.collect().sortBy(r => (r.getLong(0), r.getLong(1)))
+      DriverFrontier(rows, df.sparkSession.createDataFrame(
+        java.util.Arrays.asList(rows: _*), df.schema))
+    }
   }
 
-  /** The walk's per-QUERY side frames (qn's 20 (qid, qe, nq) rows /
-    * qlut's 20 LUT rows) materialized ONCE per serve as a
-    * deterministic LocalRelation (r18, guide §1.2/§5): the loops used
-    * to re-broadcast the distributed frame every hop, and a
-    * BroadcastExchange over a scan subtree is one Spark job per hop —
-    * over a LocalTableScan it collects on the driver without
-    * launching any. Rows sort by the unique qid, and longs/doubles/
-    * float arrays round-trip the driver bit-exactly, so every
-    * downstream value is unchanged. Bounded by the query-set size by
-    * construction (the broadcast side was always required to fit). */
+  /** The walk's per-QUERY side frames (the 20 (qid, qe, nq) rows / the
+    * 20 LUT rows) materialized ONCE per scorer as a deterministic
+    * LocalRelation (r18, guide §1.2/§5): a BroadcastExchange over a
+    * scan subtree is one Spark job per hop — over a LocalTableScan it
+    * collects on the driver without launching any. Rows sort by the
+    * unique qid, and longs/doubles/float arrays round-trip the driver
+    * bit-exactly, so every downstream value is unchanged. Bounded by
+    * the query-set size by construction (the broadcast side was always
+    * required to fit). */
   private def localizedByQid(s: SparkSession,
       df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val rows = df.collect().sortBy(_.getLong(0))
@@ -1958,18 +1842,16 @@ object VectorOps {
     * (frontier ids are queries x beam; stored out-degree is capped by
     * the graph build), the same corpus-independent bounded-collect
     * class as the frontier itself, so ONE collect funds the
-    * union + self-filter + dedup that used to run distributed — the
-    * per-hop `distinct` Exchange and its AQE stage job disappear, and
+    * union + self-filter + dedup — no per-hop `distinct` Exchange, and
     * the returned LocalRelation broadcasts into the scoring join
-    * job-free. Identical candidate set (union ∪ frontier, qid != cid,
-    * deduped; TreeSet order = the unique (qid, cid) key, so the
-    * relation is deterministic). At a fleet-sized serving batch this
-    * outgrows the driver exactly when hopEdges' literal list does
-    * (HopPushdownMaxIds); the distributed union+distinct form remains
-    * the documented escalation for that regime. */
-  private def hopCandsOf(s: SparkSession,
-      edges: org.apache.spark.sql.DataFrame, f: DriverFrontier)
-      : org.apache.spark.sql.DataFrame = {
+    * job-free. The set is frontier ∪ out-edges, qid != cid, deduped;
+    * TreeSet order = the unique (qid, cid) key, so the relation is
+    * deterministic. At a fleet-sized serving batch this outgrows the
+    * driver exactly when the pushdown literal list does
+    * (HopPushdownMaxIds); a distributed union+distinct is the
+    * documented escalation for that regime. */
+  private def hopCandsOf(edges: org.apache.spark.sql.DataFrame,
+      f: DriverFrontier): org.apache.spark.sql.DataFrame = {
     val pairs = scala.collection.mutable.TreeSet.empty[(Long, Long)]
     f.rows.foreach { r =>
       if (r.getLong(0) != r.getLong(1)) pairs += ((r.getLong(0), r.getLong(1)))
@@ -1985,13 +1867,22 @@ object VectorOps {
     val rows: java.util.List[org.apache.spark.sql.Row] =
       java.util.Arrays.asList(pairs.toSeq.map(p =>
         org.apache.spark.sql.Row(p._1, p._2)): _*)
-    s.createDataFrame(rows, schema)
+    f.df.sparkSession.createDataFrame(rows, schema)
   }
 
-  /** hopEdges over a driver-materialized frontier: same two arms and
-    * the same cap decision, with the id list taken from the rows
-    * already on the driver instead of a second collect. */
-  private def hopEdgesOf(edges: org.apache.spark.sql.DataFrame,
+  /** One hop's out-edge expansion (qid, dst as cid): the frontier's
+    * src ids ride into the stored edge table's SCAN as a pushed
+    * predicate before the broadcast join resolves the pairs.
+    * Semantically a no-op (the join restricts to the same keys), but
+    * it is what makes a hop a POINT LOOKUP instead of a full edge
+    * scan: the isin lands in the parquet scan's PushedFilters
+    * (GraphAnnSpec pins it; past parquet's inFilterThreshold=10 the
+    * reader prunes row groups by the id range, which the src-sorted
+    * edge artifact keeps tight — the >10-id shape is spec-pinned too),
+    * so at 100 TB an id-sorted/bucketed edge artifact serves each hop
+    * from the few row groups holding the frontier's ids. Above
+    * `maxPushIds` ids the hop is the plain broadcast join. */
+  private[graft] def hopEdgesOf(edges: org.apache.spark.sql.DataFrame,
       f: DriverFrontier, maxPushIds: Int = HopPushdownMaxIds)
       : org.apache.spark.sql.DataFrame = {
     val scan =
@@ -2001,214 +1892,6 @@ object VectorOps {
       .join(broadcast(f.df.select(col("qid"), col("cid").as("src"))),
         Seq("src"))
       .select(col("qid"), col("dst").as("cid"))
-  }
-
-  /** DiskANN-style serving (v19, Subramanya et al. NeurIPS'19): the
-    * v17 beam walk COMPASSED BY PQ/ADC scores instead of exact
-    * cosines — candidates are scored from their stored 32-bit codes
-    * against the query's lookup table (integer micro-unit sums, so
-    * every beam cut ranks on exact integers), and full vectors are
-    * touched ONLY for the final beam's exact re-rank. That is
-    * DiskANN's memory economics: the walk reads codes (RAM-resident
-    * at any corpus size), the exact pass reads queries x beam
-    * vectors (the "disk" tier) once at the end. */
-  private[graft] def graphAnnServeAdc(s: SparkSession, d: String,
-      beam: Int, hops: Int, degree: Int = 8, kCells: Int = 8,
-      entries: Int = 2): org.apache.spark.sql.DataFrame = {
-    val (edges, f0) = hubGraphAndEntry(s, d, degree, kCells, entries)
-    adcWalkServe(s, d, edges, f0, beam, hops,
-      Some(TrainedIndex.codes(s, d)))
-  }
-
-  /** v19's ADC beam walk over an EXPLICIT (edges, f0) pair.
-    * `codesIn` is the stored 32-bit serving representation (cid,
-    * c0..c<m-1>) — normally the persisted TrainedIndex.codes frame,
-    * so the walk reads the code ARTIFACT, never the vector column;
-    * None falls back to the map-side encode (codes are deterministic
-    * ints, so both sources are bit-identical). Query LUTs always
-    * compute at query time — queries are not stored. */
-  private[graft] def adcWalkServe(s: SparkSession, d: String,
-      edges: org.apache.spark.sql.DataFrame,
-      f0: org.apache.spark.sql.DataFrame, beam: Int, hops: Int,
-      codesIn: Option[org.apache.spark.sql.DataFrame] = None)
-      : org.apache.spark.sql.DataFrame = {
-    val frontier = adcWalkFrontier(s, d, edges, f0, beam, hops, codesIn)
-    // the one full-vector touch: exact re-rank of the final beam
-    exactRerankTop3(s, d, frontier.select(col("qid"), col("cid")))
-  }
-
-  /** The ADC walk's FINAL frontier (qid, cid, score) — factored out of
-    * adcWalkServe so the code-compassed refined variant (v21) can
-    * union it with the entry cells' members before its shortlist cut. */
-  private[graft] def adcWalkFrontier(s: SparkSession, d: String,
-      edges: org.apache.spark.sql.DataFrame,
-      f0: org.apache.spark.sql.DataFrame, beam: Int, hops: Int,
-      codesIn: Option[org.apache.spark.sql.DataFrame] = None,
-      qlutIn: Option[org.apache.spark.sql.DataFrame] = None)
-      : org.apache.spark.sql.DataFrame = {
-    val e = Tables.embeddings(s, d)
-    val cb = TrainedIndex.codebook(s, d)
-    val codes = codesIn.getOrElse(pqCorpus(e, cb))
-    // LUT side localized once per serve (r18, see localizedByQid)
-    val qlut = localizedByQid(s, qlutIn.getOrElse(queryLuts(s, d)))
-    def topB(sc: org.apache.spark.sql.DataFrame) =
-      graft.plans.TopKPerKey.topK(sc, Seq("qid"),
-        Seq(col("score").desc, col("cid").asc), beam)
-    var frontier = materializeFrontier(s, topB(scoredAdcOf(codes, qlut, f0)))
-    for (_ <- 1 to hops) {
-      frontier = materializeFrontier(s,
-        topB(scoredAdcOf(codes, qlut, hopCandsOf(s, edges, frontier))))
-    }
-    frontier.df
-  }
-
-  /** The ADC walk iterated TO FIXED POINT — exactWalkFrontierConverged
-    * with the integer code compass (v22b's budget made data-derived
-    * like v22's): hop until the frontier set stops changing, cap
-    * [[WalkMaxHops]]. Integer scores are bit-exact on both engines,
-    * so the per-hop sets — and therefore the stop — replay in SQL. */
-  private[graft] def adcWalkFrontierConverged(s: SparkSession, d: String,
-      edges: org.apache.spark.sql.DataFrame,
-      f0: org.apache.spark.sql.DataFrame, beam: Int,
-      maxHops: Int = WalkMaxHops,
-      codesIn: Option[org.apache.spark.sql.DataFrame] = None)
-      : org.apache.spark.sql.DataFrame = {
-    val e = Tables.embeddings(s, d)
-    val cb = TrainedIndex.codebook(s, d)
-    val codes = codesIn.getOrElse(pqCorpus(e, cb))
-    // LUT side localized once per serve (r18, see localizedByQid)
-    val qlut = localizedByQid(s, queryLuts(s, d))
-    def topB(sc: org.apache.spark.sql.DataFrame) =
-      graft.plans.TopKPerKey.topK(sc, Seq("qid"),
-        Seq(col("score").desc, col("cid").asc), beam)
-    var frontier = materializeFrontier(s, topB(scoredAdcOf(codes, qlut, f0)))
-    var h = 0
-    var converged = false
-    while (h < maxHops && !converged) {
-      val next = materializeFrontier(s,
-        topB(scoredAdcOf(codes, qlut, hopCandsOf(s, edges, frontier))))
-      converged = next.pairs.subsetOf(frontier.pairs)
-      frontier = next
-      h += 1
-    }
-    frontier.df
-  }
-
-  /** The broadcast query set's integer ADC lookup tables (qid,
-    * l0..l<m-1>) over the stored codebook — ONE construction shared
-    * by the walk and the refined tail (the codebook rides the
-    * expressions as literals, so duplicating the build used to pay
-    * the analysis/codegen for the LUT columns twice per serve). */
-  private def queryLuts(s: SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-    val cb = TrainedIndex.codebook(s, d)
-    Tables.embeddings(s, d).filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid") +:
-        (0 until PqM).map(i => pqLutCol(cb, i).as(s"l$i")): _*)
-  }
-
-  /** Integer ADC scoring of a (qid, cid) candidate frame from the
-    * stored codes + query LUTs — the shared compass of the walk and
-    * the v21 refined shortlist (candidates broadcast into the code
-    * scan; no vector byte is read). */
-  private def scoredAdcOf(codes: org.apache.spark.sql.DataFrame,
-      qlut: org.apache.spark.sql.DataFrame,
-      cands: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    codes.join(broadcast(cands), Seq("cid"))
-      .join(broadcast(qlut), Seq("qid"))
-      .withColumn("score", pqScoreCol)
-      .select(col("qid"), col("cid"), col("score"))
-
-  /** Exact-cosine top-3 of a (qid, cid) candidate frame — the final
-    * full-vector touch shared by the ADC serving paths. */
-  private def exactRerankTop3(s: SparkSession, d: String,
-      cands: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val e = Tables.embeddings(s, d)
-    // query side localized once (r18, see localizedByQid): its
-    // broadcast into the re-rank join launches no job
-    val qn = localizedByQid(s, e.filter(col("vec_id") < 20)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        sqrt(dot("embedding", "embedding")).as("nq")))
-    val cn = e.select(col("vec_id").as("cid"), col("embedding").as("ce"),
-      sqrt(dot("embedding", "embedding")).as("nc"))
-    val rr = cn.join(broadcast(cands), Seq("cid"))
-      .join(broadcast(qn), Seq("qid"))
-      .withColumn("cos", dot("qe", "ce") / (col("nq") * col("nc")))
-      .select(col("qid"), col("cid"), col("cos"))
-    graft.plans.TopKPerKey.topK(rr, Seq("qid"),
-      Seq(col("cos").desc, col("cid").asc), 3)
-      .select(col("qid"), col("cid"))
-  }
-
-  /** v21's refined serving at DiskANN memory economics: v17d's
-    * candidate-union recall lever (walk final beam ∪ the query's
-    * `refine` nearest cells' members) with the union scored from the
-    * stored 32-bit CODES — integer ADC, no vector byte — and only the
-    * surviving `beam` shortlist re-ranked exactly. Where v17d's
-    * refinement reads refine x n/k VECTORS per query (the exact-tier
-    * price), v21 reads refine x n/k CODES (64x smaller — the RAM
-    * tier) and queries x beam vectors once: the recall-above-plateau
-    * lever at the memory budget that lets a billion-vector corpus
-    * serve from RAM-resident codes. The ADC compass is lossy, so the
-    * shortlist can drop true neighbors the exact tier keeps — the
-    * measured recall gap to v17d is the price of the 64x, the same
-    * tradeoff v19 gates against v17. */
-  private[graft] def graphAnnServeAdcRefined(s: SparkSession, d: String,
-      beam: Int, hops: Int, degree: Int = 8, kCells: Int = 8,
-      entries: Int = 2, refine: Int = 2, shortlist: Int = 0)
-      : org.apache.spark.sql.DataFrame = {
-    val r = if (shortlist > 0) shortlist else beam // IVFADC+R's R knob
-    val (edges, f0) = hubGraphAndEntry(s, d, degree, kCells, entries)
-    refinedAdcServe(s, d, edges, f0, beam, hops, kCells, refine, r)
-  }
-
-  /** The refined-ADC SERVE over an explicit (edges, f0) pair: ADC
-    * walk to the final frontier, then the refined tail. ONE copy of
-    * the wiring ABOVE refinedAdcTail (codes source, walk params,
-    * centroid artifact) shared by v21/v21b (artifact-built graph via
-    * graphAnnServeAdcRefined) and st19c (maintained graph) — an edit
-    * to the frontier construction can no longer desynchronize the
-    * refined gates while their shared tail stays green. */
-  private[graft] def refinedAdcServe(s: SparkSession, d: String,
-      edges: org.apache.spark.sql.DataFrame,
-      f0: org.apache.spark.sql.DataFrame, beam: Int, hops: Int,
-      kCells: Int, refine: Int, shortlist: Int)
-      : org.apache.spark.sql.DataFrame = {
-    val codes = TrainedIndex.codes(s, d)
-    // one LUT build serves both the walk and the tail; the 20-row
-    // frame is checkpointed so neither replays the codebook-literal
-    // projection over the corpus scan
-    val qlut = queryLuts(s, d).localCheckpoint(true)
-    val frontier = adcWalkFrontier(s, d, edges, f0, beam, hops,
-      Some(codes), Some(qlut))
-    refinedAdcTail(s, d, frontier,
-      TrainedIndex.centroids(s, d, k = kCells), refine, shortlist,
-      codes, Some(qlut))
-  }
-
-  /** The refined-ADC serving tail — walk frontier ∪ the query's
-    * `refine` nearest cells' members, the union ranked on INTEGER ADC
-    * scores from the stored codes, the surviving `shortlist` re-ranked
-    * exactly. ONE copy shared by v21/v21b (artifact-built graph) and
-    * st19c (maintained graph) — the GameTeamAggSql convention: an edit
-    * to the union, the integer compass, or the cut cannot
-    * desynchronize the refined serving gates. */
-  private[graft] def refinedAdcTail(s: SparkSession, d: String,
-      frontier: org.apache.spark.sql.DataFrame,
-      cent: Array[Array[Double]], refine: Int, shortlist: Int,
-      codes: org.apache.spark.sql.DataFrame,
-      qlutIn: Option[org.apache.spark.sql.DataFrame] = None)
-      : org.apache.spark.sql.DataFrame = {
-    val cands = frontier.select(col("qid"), col("cid"))
-      .union(cellCandidates(s, d, cent, refine))
-      .distinct()
-    val qlut = qlutIn.getOrElse(queryLuts(s, d))
-    val sl = graft.plans.TopKPerKey.topK(
-      scoredAdcOf(codes, qlut, cands), Seq("qid"),
-      Seq(col("score").desc, col("cid").asc), shortlist)
-    exactRerankTop3(s, d, sl.select(col("qid"), col("cid")))
   }
 
   /** The corpus-coupled shortlist rule (BENCH_SCALE r14: a FIXED R
@@ -3596,7 +3279,7 @@ object VectorOps {
         "b0->c1->b1->c2->b2->c3->top-3 — the hash matches only if " +
         "every beam cut agrees cross-engine at every hop.",
       (s, d) => recallOf(bruteTruth(s, d),
-        graphAnnServe(s, d, beam = 16, hops = 3, degree = 16)),
+        serve(s, d, ServeSpec(beam = 16, maxHops = 3))._1),
       Some(s"""
         WITH ${KmeansSql.UpToCent2},
         $TruthSql,
@@ -3616,7 +3299,7 @@ object VectorOps {
         "occupancy flat, so the build's pair volume grows linearly " +
         "with the corpus instead of quadratically. Same kernels " +
         "(buildHubGraph -> persisted TrainedIndex.graph artifact -> " +
-        "exactWalkServe), same (degree=16, beam=16, hops=3) " +
+        "VectorOps.serve), same (degree=16, beam=16, hops=3) " +
         "operating point; entry medoids and hub escapes now come " +
         "from the k=25 cell geometry. The oracle replays the " +
         "identical 2-Lloyd chain at k=25 (KmeansSql.upToCent2(25) — " +
@@ -3625,8 +3308,7 @@ object VectorOps {
         "beam-walk CTEs, so every beam cut must agree cross-engine " +
         "on the scaled geometry too.",
       (s, d) => recallOf(bruteTruth(s, d),
-        graphAnnServe(s, d, beam = 16, hops = 3, degree = 16,
-          kCells = 25)),
+        serve(s, d, ServeSpec(beam = 16, maxHops = 3, kCells = 25))._1),
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
         $TruthSql,
@@ -3656,8 +3338,8 @@ object VectorOps {
         "Oracle: the k=25 chain with the probes CTE widened to " +
         "rn<=8 feeding the same f0 medoid-entry construction.",
       (s, d) => recallOf(bruteTruth(s, d),
-        graphAnnServe(s, d, beam = 16, hops = 3, degree = 16,
-          kCells = 25, entries = 8)),
+        serve(s, d, ServeSpec(beam = 16, maxHops = 3, kCells = 25,
+          entries = 8))._1),
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
         $TruthSql,
@@ -3694,8 +3376,8 @@ object VectorOps {
         "refpr/refc (the same deterministic probe ranking at width " +
         "8) unioned with the final beam and re-ranked exactly.",
       (s, d) => recallOf(bruteTruth(s, d),
-        graphAnnServeRefined(s, d, beam = 16, hops = 3, degree = 16,
-          kCells = 25, entries = 16, refine = 8)),
+        serve(s, d, ServeSpec(beam = 16, maxHops = 3, kCells = 25,
+          entries = 16, refine = Some(8)))._1),
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
         $TruthSql,
@@ -3730,7 +3412,8 @@ object VectorOps {
         "codes + LUTs, integer-ranked beam CTEs, exact re-rank of " +
         "the final beam.",
       (s, d) => recallOf(bruteTruth(s, d),
-        graphAnnServeAdc(s, d, beam = 16, hops = 3, degree = 16)),
+        serve(s, d, ServeSpec(beam = 16, maxHops = 3,
+          scoring = ServeSpec.Adc))._1),
       Some(s"""
         WITH ${KmeansSql.UpToCent2},
         $TruthSql,
@@ -3782,7 +3465,8 @@ object VectorOps {
         val lc = graft.sources.IndexArtifacts.loadFrame(s, dir.toString, "codes")
         val f0 = graphEntries(s, d, TrainedIndex.centroids(s, d, k = 8), lm)
         recallOf(bruteTruth(s, d),
-          adcWalkServe(s, d, le, f0, beam = 32, hops = 3, Some(lc)))
+          serveFrom(s, d, ServeSpec(beam = 32, maxHops = 3,
+            scoring = ServeSpec.Adc), le, f0, Some(lc))._1)
       },
       Some(s"""
         WITH ${KmeansSql.UpToCent2},
@@ -3820,8 +3504,9 @@ object VectorOps {
         "final beam, ranked by adcall, cut at 128, re-ranked " +
         "exactly.",
       (s, d) => recallOf(bruteTruth(s, d),
-        graphAnnServeAdcRefined(s, d, beam = 16, hops = 3, degree = 16,
-          kCells = 25, entries = 16, refine = 8, shortlist = 128)),
+        serve(s, d, ServeSpec(beam = 16, maxHops = 3,
+          scoring = ServeSpec.Adc, kCells = 25, entries = 16,
+          refine = Some(8), shortlist = Some(128)))._1),
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
         $TruthSql,
@@ -3859,9 +3544,11 @@ object VectorOps {
       (s, d) => {
         val n = Tables.embeddings(s, d).count()
         recallOf(bruteTruth(s, d),
-          graphAnnServeAdcRefined(s, d, beam = 16, hops = 3,
-            degree = 16, kCells = 25, entries = 16, refine = 8,
-            shortlist = scaledShortlist(n, refine = 8, kCells = 25)))
+          serve(s, d, ServeSpec(beam = 16, maxHops = 3,
+            scoring = ServeSpec.Adc, kCells = 25, entries = 16,
+            refine = Some(8),
+            shortlist = Some(scaledShortlist(n, refine = 8,
+              kCells = 25))))._1)
       },
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
@@ -3913,8 +3600,8 @@ object VectorOps {
         "walk) — so a corpus jump that needs more hops moves both " +
         "engines together instead of silently starving the serve.",
       (s, d) => recallOf(bruteTruth(s, d),
-        vamanaAnnServeConverged(s, d, beam = 64, degree = 16,
-          kCells = 25, entries = 16)),
+        serve(s, d, ServeSpec(beam = 64, graph = ServeSpec.Vamana,
+          kCells = 25, entries = 16))._1),
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
         $TruthSql,
@@ -3952,8 +3639,8 @@ object VectorOps {
         "ADC walk CTEs — each piece gated separately (v22, v19), " +
         "here hashed as one composition.",
       (s, d) => recallOf(bruteTruth(s, d),
-        vamanaAnnServeAdcConverged(s, d, beam = 64, degree = 16,
-          kCells = 25, entries = 16)),
+        serve(s, d, ServeSpec(beam = 64, graph = ServeSpec.Vamana,
+          scoring = ServeSpec.Adc, kCells = 25, entries = 16))._1),
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
         $TruthSql,
@@ -3977,7 +3664,7 @@ object VectorOps {
         "local-minimum basin never reaches. Cost: the walk's O(1) " +
         "term plus the refine x n/kCells union — O(sqrt n) per query " +
         "under the gated k~sqrt(n) rule, identical to v17d's " +
-        "economics. One tail kernel (refinedExactTail) is shared " +
+        "economics. One serve kernel (VectorOps.serveFrom) is shared " +
         "with v17d so the refined tails cannot desynchronize; the " +
         "walk runs at v22's data-derived convergence stop (VERDICT " +
         "r15 #4, cap WalkMaxHops=16), and the oracle composes the " +
@@ -3985,8 +3672,8 @@ object VectorOps {
         "(beamHopsConvergedRefinedSql) — same union/re-rank SQL as " +
         "v17d's tail over the dispatched stop-hop beam.",
       (s, d) => recallOf(bruteTruth(s, d),
-        vamanaAnnServeRefinedConverged(s, d, beam = 64, degree = 16,
-          kCells = 25, entries = 16, refine = 8)),
+        serve(s, d, ServeSpec(beam = 64, graph = ServeSpec.Vamana,
+          kCells = 25, entries = 16, refine = Some(8)))._1),
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
         $TruthSql,

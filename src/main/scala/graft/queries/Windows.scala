@@ -1249,8 +1249,9 @@ object Windows {
         val (edges, f0) = maintainedServe(s,
           buildMaintainedStore(s, d, kCells = 25, "graft_st19b_"))
         VectorOps.recallOf(VectorOps.bruteTruth(s, d),
-          VectorOps.adcWalkServe(s, d, edges, f0, beam = 16, hops = 3,
-            Some(TrainedIndex.codes(s, d))))
+          VectorOps.serveFrom(s, d, VectorOps.ServeSpec(beam = 16,
+            maxHops = 3, scoring = VectorOps.ServeSpec.Adc),
+            edges, f0)._1)
       },
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
@@ -1275,7 +1276,7 @@ object Windows {
         "cells' members, the union ranks on INTEGER ADC scores from " +
         "the persisted codes, and the corpus-coupled shortlist " +
         "(v21b's 20%-of-union rule, computed from the data on both " +
-        "sides) is re-ranked exactly — via the SAME refinedAdcServe " +
+        "sides) is re-ranked exactly — via the SAME VectorOps.serveFrom " +
         "kernel as v21/v21b, so the three refined gates cannot " +
         "desynchronize. The maintenance stream itself is st19b's " +
         "hashed subject, so this gate reads the maintained state " +
@@ -1295,10 +1296,11 @@ object Windows {
           maintainedStore(s, d, kCells = 25))
         val n = Tables.embeddings(s, d).count()
         VectorOps.recallOf(VectorOps.bruteTruth(s, d),
-          VectorOps.refinedAdcServe(s, d, edges, f0, beam = 16,
-            hops = 3, kCells = 25, refine = 8,
-            shortlist = VectorOps.scaledShortlist(n, refine = 8,
-              kCells = 25)))
+          VectorOps.serveFrom(s, d, VectorOps.ServeSpec(beam = 16,
+            maxHops = 3, scoring = VectorOps.ServeSpec.Adc, kCells = 25,
+            refine = Some(8),
+            shortlist = Some(VectorOps.scaledShortlist(n, refine = 8,
+              kCells = 25))), edges, f0)._1)
       },
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},
@@ -1347,7 +1349,8 @@ object Windows {
         val (edges, f0) = maintainedServe(s,
           maintainedVamanaStore(s, d, kCells = 25))
         VectorOps.recallOf(VectorOps.bruteTruth(s, d),
-          VectorOps.exactWalkServeConverged(s, d, edges, f0, beam = 64))
+          VectorOps.serveFrom(s, d, VectorOps.ServeSpec(beam = 64),
+            edges, f0)._1)
       },
       Some(s"""
         WITH ${KmeansSql.upToCent2(25)},

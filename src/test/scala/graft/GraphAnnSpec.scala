@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.queries.VectorOps.{DriverFrontier, ServeSpec}
+
 /** v17 graph-navigation serving: determinism, output contract, and the
   * hub-edge escape property that motivates the graph shape (a purely
   * cell-local graph caps recall at the entry cells' contents —
@@ -12,10 +14,10 @@ class GraphAnnSpec extends SparkSpec {
 
   test("beam walk is deterministic: two runs serve identical sets") {
     val a = graft.queries.VectorOps
-      .graphAnnServe(spark, sf, beam = 16, hops = 3, degree = 16)
+      .serve(spark, sf, ServeSpec(beam = 16, maxHops = 3))._1
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val b = graft.queries.VectorOps
-      .graphAnnServe(spark, sf, beam = 16, hops = 3, degree = 16)
+      .serve(spark, sf, ServeSpec(beam = 16, maxHops = 3))._1
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(a == b)
     assert(a.nonEmpty)
@@ -24,7 +26,7 @@ class GraphAnnSpec extends SparkSpec {
   test("output contract: <=3 neighbors per query, never self, all " +
       "queries served") {
     val rows = graft.queries.VectorOps
-      .graphAnnServe(spark, sf, beam = 16, hops = 3, degree = 16)
+      .serve(spark, sf, ServeSpec(beam = 16, maxHops = 3))._1
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(rows.forall { case (q, c) => q != c })
     val perQ = rows.groupBy(_._1).map { case (_, v) => v.length }
@@ -35,7 +37,7 @@ class GraphAnnSpec extends SparkSpec {
 
   test("final per-query cut is the TopKPerKey heap, not a window") {
     val p = graft.queries.VectorOps
-      .graphAnnServe(spark, sf, beam = 16, hops = 3, degree = 16)
+      .serve(spark, sf, ServeSpec(beam = 16, maxHops = 3))._1
       .queryExecution.executedPlan.toString
       .split("== Initial Plan ==")(0)
     assert(p.contains("TopKPerKey"), p.take(2000))
@@ -44,11 +46,11 @@ class GraphAnnSpec extends SparkSpec {
 
   test("ADC walk (v19): deterministic, contract-clean, and the final " +
       "answer comes from the exact re-rank of the last beam") {
-    val a = graft.queries.VectorOps
-      .graphAnnServeAdc(spark, sf, beam = 16, hops = 3, degree = 16)
+    val a = graft.queries.VectorOps.serve(spark, sf,
+        ServeSpec(beam = 16, maxHops = 3, scoring = ServeSpec.Adc))._1
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = graft.queries.VectorOps
-      .graphAnnServeAdc(spark, sf, beam = 16, hops = 3, degree = 16)
+    val b = graft.queries.VectorOps.serve(spark, sf,
+        ServeSpec(beam = 16, maxHops = 3, scoring = ServeSpec.Adc))._1
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(a == b)
     assert(a.nonEmpty)
@@ -89,7 +91,8 @@ class GraphAnnSpec extends SparkSpec {
       .orderBy(col("cid")).limit(3)
       .withColumn("qid", lit(0L)).select(col("qid"), col("cid"))
       .localCheckpoint(true)
-    val hop = graft.queries.VectorOps.hopEdges(edges, frontier)
+    val hop = graft.queries.VectorOps
+      .hopEdgesOf(edges, DriverFrontier.of(frontier))
     val p = hop.queryExecution.executedPlan.toString
     assert(p.contains("PushedFilters") &&
       Seq("In(src", "in(src").exists(p.contains), p.take(1200))
@@ -117,7 +120,8 @@ class GraphAnnSpec extends SparkSpec {
       .withColumn("qid", lit(0L)).select(col("qid"), col("cid"))
       .localCheckpoint(true)
     assert(frontier.count() == 16)
-    val hop = graft.queries.VectorOps.hopEdges(edges, frontier)
+    val hop = graft.queries.VectorOps
+      .hopEdgesOf(edges, DriverFrontier.of(frontier))
     val p = hop.queryExecution.executedPlan.toString
     assert(p.contains("PushedFilters") &&
       Seq("In(src", "in(src").exists(p.contains), p.take(1200))
@@ -127,12 +131,6 @@ class GraphAnnSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val pruned = hop.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pruned == plain && pruned.nonEmpty)
-    // regression: an effectively-unbounded cap must not overflow the
-    // limit(cap+1) bound (Int.MaxValue + 1 was a negative limit)
-    val unbounded = graft.queries.VectorOps
-      .hopEdges(edges, frontier, maxPushIds = Int.MaxValue)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(unbounded == plain)
   }
 
   test("above the pushdown cap the hop flips to the plain broadcast " +
@@ -144,8 +142,8 @@ class GraphAnnSpec extends SparkSpec {
       .orderBy(col("cid")).limit(16)
       .withColumn("qid", lit(0L)).select(col("qid"), col("cid"))
       .localCheckpoint(true)
-    val hop = graft.queries.VectorOps
-      .hopEdges(edges, frontier, maxPushIds = 8) // 16 ids > cap of 8
+    val hop = graft.queries.VectorOps.hopEdgesOf(edges,
+      DriverFrontier.of(frontier), maxPushIds = 8) // 16 ids > cap of 8
     val p = hop.queryExecution.executedPlan.toString
     assert(!Seq("In(src", "in(src").exists(p.contains),
       "above-cap arm must not inline frontier ids: " + p.take(1200))
@@ -172,12 +170,12 @@ class GraphAnnSpec extends SparkSpec {
       assert(p.contains("TopKPerKey"), p.take(2000))
       assert(!p.contains("Window"), p.take(2000))
     }
-    check(graft.queries.VectorOps.graphAnnServeRefined(spark, sf,
-      beam = 8, hops = 2, degree = 8, kCells = 8, entries = 4,
-      refine = 2))
-    check(graft.queries.VectorOps.graphAnnServeAdcRefined(spark, sf,
-      beam = 8, hops = 2, degree = 8, kCells = 8, entries = 4,
-      refine = 2, shortlist = 16))
+    check(graft.queries.VectorOps.serve(spark, sf, ServeSpec(beam = 8,
+      maxHops = 2, degree = 8, kCells = 8, entries = 4,
+      refine = Some(2)))._1)
+    check(graft.queries.VectorOps.serve(spark, sf, ServeSpec(beam = 8,
+      maxHops = 2, scoring = ServeSpec.Adc, degree = 8, kCells = 8,
+      entries = 4, refine = Some(2), shortlist = Some(16)))._1)
   }
 
   test("the refined union can only help: v17d's served set per query " +
@@ -196,13 +194,12 @@ class GraphAnnSpec extends SparkSpec {
       rows.groupBy(_._1).map { case (q, v) =>
         q -> v.map { case (_, c) => cos(vecs(q), vecs(c)) }.sum
       }
-    val walk = scoreOf(graft.queries.VectorOps
-      .graphAnnServe(spark, sf, beam = 8, hops = 2, degree = 8,
-        kCells = 8, entries = 4)
+    val spec = ServeSpec(beam = 8, maxHops = 2, degree = 8, kCells = 8,
+      entries = 4)
+    val walk = scoreOf(graft.queries.VectorOps.serve(spark, sf, spec)._1
       .collect().map(r => (r.getLong(0), r.getLong(1))))
     val refined = scoreOf(graft.queries.VectorOps
-      .graphAnnServeRefined(spark, sf, beam = 8, hops = 2, degree = 8,
-        kCells = 8, entries = 4, refine = 2)
+      .serve(spark, sf, spec.copy(refine = Some(2)))._1
       .collect().map(r => (r.getLong(0), r.getLong(1))))
     walk.keys.foreach { q =>
       assert(refined(q) >= walk(q) - 1e-12,
@@ -229,7 +226,7 @@ class GraphAnnSpec extends SparkSpec {
       .collect().groupBy(_.getLong(0))
       .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
     val served = graft.queries.VectorOps
-      .graphAnnServe(spark, sf, beam = 16, hops = 3, degree = 16)
+      .serve(spark, sf, ServeSpec(beam = 16, maxHops = 3))._1
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val escapes = served.count { case (q, c) =>
       !probes(q).contains(asg(c))
@@ -278,13 +275,11 @@ class GraphAnnSpec extends SparkSpec {
   }
 
   test("v22 serve is deterministic and meets the output contract") {
-    val a = graft.queries.VectorOps
-      .vamanaAnnServe(spark, sf, beam = 16, hops = 2, degree = 16,
-        kCells = 8, entries = 2)
+    val spec = ServeSpec(beam = 16, maxHops = 2, graph = ServeSpec.Vamana,
+      degree = 16, kCells = 8, entries = 2)
+    val a = graft.queries.VectorOps.serve(spark, sf, spec)._1
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val b = graft.queries.VectorOps
-      .vamanaAnnServe(spark, sf, beam = 16, hops = 2, degree = 16,
-        kCells = 8, entries = 2)
+    val b = graft.queries.VectorOps.serve(spark, sf, spec)._1
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(a == b && a.nonEmpty)
     assert(a.forall { case (q, c) => q != c })
@@ -315,8 +310,9 @@ class GraphAnnSpec extends SparkSpec {
         spark, sf, edges, f0, beam = 16, hops = 3,
         Some(graft.queries.TrainedIndex.codes(spark, sf)))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val batch = graft.queries.VectorOps.graphAnnServeAdc(
-        spark, sf, beam = 16, hops = 3, degree = 16, kCells = 8)
+    val batch = graft.queries.VectorOps.serve(spark, sf,
+        ServeSpec(beam = 16, maxHops = 3, scoring = ServeSpec.Adc,
+          degree = 16, kCells = 8))._1
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(maintained == batch && maintained.nonEmpty)
   }
@@ -344,28 +340,46 @@ class GraphAnnSpec extends SparkSpec {
       "stop lands strictly inside the cap — headroom, not the " +
       "budget — and the converged serve equals the fixed-hop serve " +
       "run at the measured stop") {
-    val (served, stop) = graft.queries.VectorOps.vamanaWalkStop(
-      spark, sf, beam = 16, degree = 16, kCells = 8, entries = 2)
+    import graft.queries.{TrainedIndex, VectorOps}
+    val spec = ServeSpec(beam = 16, graph = ServeSpec.Vamana, degree = 16,
+      kCells = 8, entries = 2)
+    val (served, stop) = VectorOps.serve(spark, sf, spec)
     assert(stop >= 1 && stop < graft.queries.VectorOps.WalkMaxHops,
       s"stop=$stop hit the cap — the walk is budget-starved again " +
         "(raise WalkMaxHops and re-measure, BENCH_SCALE r15)")
     val conv = served.collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    // the pinned-hop kernel at exactly the measured stop must serve
-    // the identical rows: convergence found the SAME fixed point
-    val pinned = graft.queries.VectorOps.vamanaAnnServe(
-        spark, sf, beam = 16, hops = stop, degree = 16, kCells = 8,
-        entries = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(conv == pinned && conv.nonEmpty)
-    // one hop PAST the stop changes nothing — the stop is a fixed
-    // point, not an arbitrary cut
-    val past = graft.queries.VectorOps.vamanaAnnServe(
-        spark, sf, beam = 16, hops = stop + 1, degree = 16, kCells = 8,
-        entries = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(past == conv,
-      "frontier moved after the detected fixed point")
+    // capped at exactly the measured stop (the fixed-hop form) the
+    // serve is identical: convergence found the SAME fixed point
+    val (pinned, pinnedStop) = VectorOps.serve(spark, sf,
+      spec.copy(maxHops = stop))
+    assert(pinnedStop == stop)
+    assert(pinned.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      == conv && conv.nonEmpty)
+    // the fixed point checked by the hop step itself, not by the
+    // walk's own stop test: hops PAST the stop do not move the
+    // frontier (pairs or scores)
+    val (edges, medoids) = TrainedIndex.vamanaGraph(spark, sf,
+      degree = 16, kCells = 8)
+    val f0 = VectorOps.graphEntries(spark, sf,
+      TrainedIndex.centroids(spark, sf, k = 8), medoids, entries = 2)
+    val scorer = VectorOps.exactScorer(spark, sf)
+    val (frontier, walkStop) =
+      VectorOps.walk(edges, f0, scorer, beam = 16, VectorOps.WalkMaxHops)
+    assert(walkStop == stop)
+    def rowsOf(f: DriverFrontier) =
+      f.rows.toSeq.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    var f = DriverFrontier.of(frontier)
+    val atStop = rowsOf(f)
+    (1 to 2).foreach { _ =>
+      f = VectorOps.hop(edges, f, scorer, beam = 16)
+      assert(rowsOf(f) == atStop,
+        "frontier moved after the detected fixed point")
+    }
+    // a cap below the measured stop binds: the walk reports the cap
+    val (_, capped) =
+      VectorOps.walk(edges, f0, scorer, beam = 16, maxHops = stop - 1)
+    assert(capped == stop - 1)
   }
 
   test("st19d: the maintained-lake Vamana OPTIMIZE pass equals the " +
